@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
+
+import graft.functions.GraftExtensions
 
 /** Single place that builds a correctly-configured local SparkSession.
   *
@@ -15,11 +18,37 @@ import org.apache.spark.sql.SparkSession
   *   - AQE on: runtime coalescing + skew-join handling is part of the
   *     100 TB design (SURVEY §4.1 — the reference's static repartition rule
   *     is strictly weaker).
+  *
+  * Three more make generated code compile once per engine, not once per
+  * session and literal value. Spark keys its compiled-class cache
+  * (`CodeGenerator.cache`) on (context classloader, Java source), and
+  * every wire connection is a new SparkSession:
+  *   - artifact isolation off: with it on, each SparkSession's tasks run
+  *     under their own classloader, so every connection recompiled
+  *     byte-identical sources. Safe because nothing in the engine adds
+  *     session artifacts (no `ADD JAR`, no `addArtifact`, no classloaders of
+  *     its own), so there is nothing to isolate.
+  *   - [[graft.plans.ParameterizeLiterals]], a physical rule installed by
+  *     [[GraftExtensions.injectPlanRules]]: filter comparisons and `IN` lists
+  *     pass int/long/date/timestamp/double literals through the generated
+  *     class's `references`, so the source no longer depends on the value.
+  *     It applies to `FilterExec` conditions only, before
+  *     `CollapseCodegenStages` with and without AQE; scan pushdown keeps its
+  *     `Literal`s.
+  *   - [[CodegenCacheEntries]] cache entries instead of 100.
   */
 object Sessions {
+  /** `spark.sql.codegen.cache.maxEntries`: the smallest round size that
+    * holds the engine's largest working set, one `graft.Verify` pass over
+    * all 222 entries, which compiles 2,917 distinct classes at sf0.01.
+    * Spark's default of 100 evicts classes that later queries need again.
+    * The cache fills only to the working set a process actually runs.
+    */
+  val CodegenCacheEntries = 3000
+
   def build(appName: String,
             cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
-    val s = SparkSession.builder()
+    val b = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus)
@@ -39,25 +68,20 @@ object Sessions {
       // carry crash-safety where it matters — stagedReplace).
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
       .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .getOrCreate()
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+    if (!GraftExtensions.configured(new SparkConf().getOption("spark.sql.extensions")))
+      b.withExtensions(GraftExtensions.injectPlanRules)
+    val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // Fixed-zone civil-field collapse (year/month/day over timestamps as
     // pure integer arithmetic) — registered here so EVERY entry point
     // (bench anchors, verify, servers, tests) plans through it.
-    if (!s.experimental.extraOptimizations
-        .exists(_.isInstanceOf[graft.plans.CivilFieldRewrite]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.CivilFieldRewrite(s)
+    GraftExtensions.addOptimization(s, graft.plans.CivilFieldRewrite(s))
     // Monotone civil-predicate unwrap (toYear(d)=1995 → d range) — must
     // follow CivilFieldRewrite so it sees the EpochCivilField form.
-    if (!s.experimental.extraOptimizations
-        .exists(_.isInstanceOf[graft.plans.CivilPredicateUnwrap]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.CivilPredicateUnwrap(s)
-    if (!s.experimental.extraOptimizations
-        .exists(_.isInstanceOf[graft.plans.ProjectionRoute]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.ProjectionRoute(s)
+    GraftExtensions.addOptimization(s, graft.plans.CivilPredicateUnwrap(s))
+    GraftExtensions.addOptimization(s, graft.plans.ProjectionRoute(s))
     s
   }
 }

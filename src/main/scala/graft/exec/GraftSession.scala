@@ -37,38 +37,21 @@ class GraftSession(val spark: SparkSession,
   // register a pack ad hoc earlier in the process.
   graft.functions.GraftFunctions.registerAll(spark)
 
-  // Partition-prune derivation (the reference's one custom rewrite,
-  // parse.rs:539-893) as a Catalyst optimizer rule.
-  if (!spark.experimental.extraOptimizations
-      .exists(_.isInstanceOf[graft.plans.PartitionPruneDerivation]))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+
-        graft.plans.PartitionPruneDerivation(spark)
-
-  // Fixed-zone civil-field collapse (toYear/date_part('year') as integer
-  // arithmetic) — idempotent alongside the Sessions.build registration for
-  // sessions constructed elsewhere (e.g. a bare SparkSession handed in).
-  if (!spark.experimental.extraOptimizations
-      .exists(_.isInstanceOf[graft.plans.CivilFieldRewrite]))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+
-        graft.plans.CivilFieldRewrite(spark)
-
-  // Monotone civil-predicate unwrap (toYear(d)=1995 → raw d range for
-  // PushedFilters + __ptk pruning) — after CivilFieldRewrite by list order.
-  if (!spark.experimental.extraOptimizations
-      .exists(_.isInstanceOf[graft.plans.CivilPredicateUnwrap]))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+
-        graft.plans.CivilPredicateUnwrap(spark)
-
-  // CH projection routing: matching aggregates over a table with ADD
-  // PROJECTION metadata re-aggregate the hidden pre-aggregated table.
-  if (!spark.experimental.extraOptimizations
-      .exists(_.isInstanceOf[graft.plans.ProjectionRoute]))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+
-        graft.plans.ProjectionRoute(spark)
+  // The optimizer rules, in Sessions.build's order, for sessions that did
+  // not come from it (e.g. a bare SparkSession handed in); each is added
+  // once per session:
+  //  - fixed-zone civil-field collapse (toYear/date_part('year') as integer
+  //    arithmetic);
+  //  - monotone civil-predicate unwrap (toYear(d)=1995 → raw d range for
+  //    PushedFilters + __ptk pruning), after CivilFieldRewrite by list order;
+  //  - CH projection routing: matching aggregates over a table with ADD
+  //    PROJECTION metadata re-aggregate the hidden pre-aggregated table;
+  //  - partition-prune derivation (the reference's one custom rewrite,
+  //    parse.rs:539-893).
+  graft.functions.GraftExtensions.addOptimization(spark, graft.plans.CivilFieldRewrite(spark))
+  graft.functions.GraftExtensions.addOptimization(spark, graft.plans.CivilPredicateUnwrap(spark))
+  graft.functions.GraftExtensions.addOptimization(spark, graft.plans.ProjectionRoute(spark))
+  graft.functions.GraftExtensions.addOptimization(spark, graft.plans.PartitionPruneDerivation(spark))
 
   /** Hidden partition-key column name (not shown by DESC; reference keeps
     * the ptk entirely out of the table schema, crates/meta/src/types.rs:55-63).
@@ -478,7 +461,8 @@ class GraftSession(val spark: SparkSession,
     case ShowTables(db, like, neg) =>
       val base = db.fold(spark.sql("SHOW TABLES"))(d => spark.sql(s"SHOW TABLES IN `$d`"))
       val named = base.filter(!col("tableName").startsWith("graft_tmp_") &&
-          !col("tableName").startsWith("__proj_"))
+          !col("tableName").startsWith("__proj_") &&
+          !col("tableName").startsWith("__graft"))
         .select(col("tableName").as("name"))
       like.fold(named) { pat =>
         val m = col("name").like(pat)

@@ -8,8 +8,11 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.{TreePattern, UnaryLike}
 import org.apache.spark.sql.catalyst.trees.TreePattern.TreePattern
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import org.apache.spark.sql.types._
 
 /** ClickHouse scalar-function pack — SURVEY.md §2.7.
@@ -1049,8 +1052,9 @@ object UuidBytes {
 
 /** SparkSessionExtensions installer: enable with
   * `spark.sql.extensions=graft.functions.GraftExtensions`. Injects the CH
-  * function pack and the partition-prune derivation rule (the same pair
-  * GraftSession registers at runtime).
+  * function pack, the optimizer rules GraftSession registers at runtime,
+  * and the physical rules of [[GraftExtensions.injectPlanRules]], which
+  * `Sessions.build` installs through the same helper.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -1064,5 +1068,34 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(graft.plans.CivilFieldRewrite(_))
     ext.injectOptimizerRule(graft.plans.CivilPredicateUnwrap(_))
     ext.injectOptimizerRule(graft.plans.ProjectionRoute(_))
+    GraftExtensions.injectPlanRules(ext)
+  }
+}
+
+object GraftExtensions {
+  /** Physical rules: literal parameterization of filters, before
+    * `CollapseCodegenStages` (see [[graft.plans.ParameterizeLiterals]]).
+    */
+  def injectPlanRules(ext: SparkSessionExtensions): Unit =
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = graft.plans.ParameterizeLiterals
+    })
+
+  /** Whether a `spark.sql.extensions` value names this installer. Its rules
+    * are then injected at session build, and the runtime registrations
+    * (`Sessions.build`, [[addOptimization]]) stand down so that no rule runs
+    * twice.
+    */
+  def configured(extensions: Option[String]): Boolean =
+    extensions.exists(_.split(",").map(_.trim).contains(classOf[GraftExtensions].getName))
+
+  /** Appends `rule` to the session's extra optimizations unless a rule of
+    * its class is already there or [[configured]] injects it.
+    */
+  def addOptimization(spark: SparkSession, rule: Rule[LogicalPlan]): Unit = {
+    val ex = spark.experimental
+    if (!configured(spark.conf.getOption("spark.sql.extensions")) &&
+        !ex.extraOptimizations.exists(_.getClass == rule.getClass))
+      ex.extraOptimizations = ex.extraOptimizations :+ rule
   }
 }

@@ -95,6 +95,22 @@ class CompatSpec extends AnyFunSuite {
     g.sql("DROP TABLE cp_like_a")
   }
 
+  test("SHOW TABLES lists only user tables after a system.tables read " +
+    "(the engine's own __graft views stay hidden)") {
+    // a fresh session: the shared one carries other suites' temp views
+    val g = new GraftSession(spark.newSession(), skipRestore = true)
+    g.sql("DROP DATABASE IF EXISTS cp_showdb")
+    g.sql("CREATE DATABASE cp_showdb")
+    g.sql("CREATE TABLE cp_showdb.st_a(x Int64)")
+    g.sql("CREATE TABLE cp_showdb.st_b(x Int64)")
+    assert(g.sql("SELECT name FROM system.tables WHERE database = 'cp_showdb'")
+      .collect().length === 2)
+    val names = g.sql("SHOW TABLES FROM cp_showdb").collect()
+      .map(_.getString(0)).toSeq.sorted
+    assert(names === Seq("st_a", "st_b"), names)
+    g.sql("DROP DATABASE cp_showdb")
+  }
+
   test("GROUP BY ALL (CH 22.x+ shorthand) groups by every non-aggregate " +
     "select item through the dialect pipeline") {
     g.sql("DROP TABLE IF EXISTS cp_gba")

@@ -86,7 +86,7 @@ object Bench {
       System.err.println(s"[bench] registerAll failed: ${e.getMessage}")
     }
     Tables.registrationErrors(spark).foreach { case (t, c) =>
-      System.err.println(s"[bench] table '$t' unavailable: ${c.getMessage}")
+      System.err.println(s"[bench] table '$t' unavailable: $c")
     }
     // File-export fixtures for the c01/c02 scan entries: written here, once,
     // so their timed runs measure the scan, not the export.

@@ -53,26 +53,20 @@ object Tables {
     }
   }
 
-  // One registration per (session, dir): re-running the same query must not
-  // re-read ten parquet footers (VERDICT r1 defect #7).
-  private val registeredDir =
-    new java.util.concurrent.ConcurrentHashMap[Integer, String]()
-  // Layout probe result per session (computed once at registerAll): true
-  // when the documents scan cannot parallelize on its own.
-  private val probedClumped =
-    new java.util.concurrent.ConcurrentHashMap[Integer, java.lang.Boolean]()
+  // The session's last registration (its engine state): the dir, the
+  // documents layout probe (true when that scan cannot parallelize on its
+  // own), and the tables that failed. One registration per (session, dir):
+  // re-running the same query must not re-read ten parquet footers
+  // (VERDICT r1 defect #7).
+  private def registration(spark: SparkSession) =
+    graft.exec.GraftSession.state(spark).registration
 
-  // Per-session ledger of tables that failed to register and why. A healthy
-  // registerAll leaves the session's entry empty.
-  private val registerErrors =
-    new java.util.concurrent.ConcurrentHashMap[Integer, Map[String, Throwable]]()
-
-  /** Tables that failed to register on this session, with their real causes
-    * (empty when everything registered). Lets callers turn a downstream
-    * TABLE_OR_VIEW_NOT_FOUND into the actual registration failure. */
-  def registrationErrors(spark: SparkSession): Map[String, Throwable] =
-    Option(registerErrors.get(Integer.valueOf(System.identityHashCode(spark))))
-      .getOrElse(Map.empty)
+  /** Tables that failed to register on this session, with the message of
+    * their real causes (empty when everything registered). Lets callers
+    * turn a downstream TABLE_OR_VIEW_NOT_FOUND into the actual registration
+    * failure. */
+  def registrationErrors(spark: SparkSession): Map[String, String] =
+    registration(spark).fold(Map.empty[String, String])(_.errors)
 
   /** Register every test table as a temp view (for spark.sql-based entries).
     *
@@ -83,24 +77,20 @@ object Tables {
     * registered, so a retry on the same session repairs a partial
     * registration instead of no-op'ing against a poisoned cache.
     */
-  def registerAll(spark: SparkSession, dir: String): Unit = {
-    val key = Integer.valueOf(System.identityHashCode(spark))
-    if (registeredDir.get(key) != dir) {
+  def registerAll(spark: SparkSession, dir: String): Unit =
+    if (!registration(spark).exists(r => r.dir == dir && r.errors.isEmpty)) {
       val errs = all.flatMap { n =>
         try { apply(spark, dir, n).createOrReplaceTempView(n); None }
         catch { case e: Exception =>
           System.err.println(s"[graft] table '$n' failed to register from " +
             s"$dir: ${e.toString.linesIterator.next()}")
-          Some(n -> (e: Throwable))
+          Some(n -> Option(e.getMessage).getOrElse(e.getClass.getName))
         }
       }.toMap
-      probedClumped.put(key,
-        java.lang.Boolean.valueOf(clumped(spark, s"$dir/documents.parquet")))
-      registerErrors.put(key, errs)
-      if (errs.isEmpty) registeredDir.put(key, dir)
-      else registeredDir.remove(key)
+      graft.exec.GraftSession.state(spark).registration = Some(
+        graft.exec.GraftSession.Registration(
+          dir, clumped(spark, s"$dir/documents.parquet"), errs))
     }
-  }
 
   /** Total parquet row groups under `path` (file or directory of part
     * files) — footer metadata only, no data read. A parquet scan's
@@ -146,10 +136,7 @@ object Tables {
     * fixture layouts that path serves.
     */
   def spreadOn(spark: SparkSession): Boolean =
-    confSpread(spark).getOrElse {
-      val key = Integer.valueOf(System.identityHashCode(spark))
-      Option(probedClumped.get(key)).forall(_.booleanValue)
-    }
+    confSpread(spark).getOrElse(registration(spark).forall(_.clumped))
 
   private def confSpread(spark: SparkSession): Option[Boolean] =
     spark.conf.getOption("graft.spread")
@@ -191,12 +178,9 @@ object Tables {
     */
   def maybeSpread(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    val spread = confSpread(spark).orElse {
-      val key = Integer.valueOf(System.identityHashCode(spark))
-      Option(probedClumped.get(key)).map(_.booleanValue)
-    }.getOrElse {
-      df.rdd.getNumPartitions < spark.sparkContext.defaultParallelism / 2
-    }
+    val spread = confSpread(spark).orElse(registration(spark).map(_.clumped))
+      .getOrElse(
+        df.rdd.getNumPartitions < spark.sparkContext.defaultParallelism / 2)
     // explicit core-count partitioning: a bare repartition() is AQE-
     // coalescable and folds back to 1 partition on small-byte input,
     // serializing the per-row codec work (see spreadHint's note)

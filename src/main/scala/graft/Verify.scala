@@ -35,7 +35,7 @@ object Verify {
         // per query instead (VERDICT r9 wrong #2).
         val regCause = Tables.registrationErrors(spark).collectFirst {
           case (t, c) if Option(e.getMessage).exists(_.contains(s"`$t`")) =>
-            s" (table '$t' failed to register: ${c.getMessage})"
+            s" (table '$t' failed to register: $c)"
         }.getOrElse("")
         System.err.println(s"[verify] $name failed: ${e.getMessage}$regCause")
       } finally
